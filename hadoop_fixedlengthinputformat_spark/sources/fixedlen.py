@@ -631,25 +631,28 @@ def _plan_file(
     ]
 
 
-def _read_aligned(f, start: int, end: int, chunk_records: int, rl: int) -> Iterator[bytes]:
+def _read_aligned(f, start: int, end: int, chunk_records: int, rl: int) -> Iterator[bytearray]:
     """Yield record-aligned byte chunks in [start, end); short-read-safe
     (port of the read loop FixedLengthRecordReader.java:221-243 — kept for
-    object-store streams where read(n) may return fewer bytes)."""
+    object-store streams where readinto may fill fewer bytes).  Each
+    chunk is read straight into its own buffer: one copy per chunk."""
     f.seek(start)
     pos = start
     while pos < end:
         want = min(chunk_records * rl, end - pos)
-        buf = bytearray()
-        while len(buf) < want:
-            got = f.read(want - len(buf))
-            if not got:
-                raise IOError(
-                    f"fixedlen: unexpected EOF at {pos + len(buf)} "
-                    f"(mid-record; cf. FixedLengthRecordReader.java:231-235)"
-                )
-            buf += got
+        buf = bytearray(want)
+        filled = 0
+        with memoryview(buf) as view:
+            while filled < want:
+                got = f.readinto(view[filled:])
+                if not got:
+                    raise IOError(
+                        f"fixedlen: unexpected EOF at {pos + filled} "
+                        f"(mid-record; cf. FixedLengthRecordReader.java:231-235)"
+                    )
+                filled += got
         pos += want
-        yield bytes(buf)
+        yield buf
 
 
 def _read_codec_stream(

@@ -262,12 +262,131 @@ _VALID_RE = {
     "int": r"^-?[0-9]{1,18}$",
     "long": r"^-?[0-9]{1,18}$",
     "double": r"^-?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$",
-    "date": r"^[0-9]{4}-(0[1-9]|1[0-2])-(0[1-9]|[12][0-9]|3[01])$",
     "implied": r"^-?[0-9]{1,18}$",
-    "julian": r"^[0-9]{5}([0-9]{2})?$",  # width re-checked numerically below
 }
 
 _I32_MIN, _I32_MAX = -(2**31), 2**31 - 1
+
+
+# ---------------------------------------------------------------------------
+# Calendar fields: integer arithmetic on the byte matrix, no string parse
+
+_DAYS_IN_MONTH = np.array([0, 31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31])
+
+
+def _is_leap(year: np.ndarray) -> np.ndarray:
+    return (year % 4 == 0) & ((year % 100 != 0) | (year % 400 == 0))
+
+
+def _days_from_civil(year, month, day) -> np.ndarray:
+    """Proleptic-Gregorian date -> days since 1970-01-01, vectorized.
+
+    H. Hinnant's days_from_civil: years are counted from March 1, so the
+    leap day is the last day of its year; a date is then whole 400-year
+    eras of 146097 days plus its day within the era."""
+    y = year - (month <= 2)
+    era = y // 400
+    yoe = y - era * 400
+    doy = (153 * ((month + 9) % 12) + 2) // 5 + day - 1
+    return era * 146097 + yoe * 365 + yoe // 4 - yoe // 100 + doy - 719468
+
+
+def _value_columns(sl: np.ndarray, width: int) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's space-trimmed value as ``width`` bytes, transposed to
+    (width, n) so every byte position is one contiguous row, and whether
+    the trimmed value is exactly that wide (a blank row is not)."""
+    n, w = sl.shape
+    if w < width:
+        return np.full((width, n), 0x20, np.uint8), np.zeros(n, bool)
+    if w == width:
+        return np.ascontiguousarray(sl.T), (sl[:, 0] != 0x20) & (sl[:, -1] != 0x20)
+    t = np.ascontiguousarray(sl.T)
+    lead, trail = np.zeros(n, np.intp), np.zeros(n, np.intp)
+    for pad, rows in ((lead, t), (trail, t[::-1])):
+        blank = np.ones(n, bool)
+        for row in rows:
+            blank &= row == 0x20
+            pad += blank
+    start = np.minimum(lead, w - width)
+    win = t[:width]
+    # one np.where per possible offset: cheaper than a fancy-index gather
+    for k in range(1, w - width + 1):
+        win = np.where(start == k, t[k : k + width], win)
+    return win, w - lead - trail == width
+
+
+def _digits(cols: np.ndarray, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
+    """Byte rows [lo, hi) of a (width, n) value window as one decimal
+    number per value, and whether those bytes are all ASCII digits (any
+    other byte wraps past 9 in uint8)."""
+    val = np.zeros(cols.shape[1], np.int32)
+    ok = np.ones(cols.shape[1], bool)
+    for row in cols[lo:hi] - np.uint8(0x30):
+        ok &= row <= 9
+        val = val * 10 + row
+    return val, ok
+
+
+def _malformed(f: FieldSpec, sl: np.ndarray, bad: np.ndarray, what: str) -> ValueError:
+    value = bytes(sl[int(np.argmax(bad))]).decode("latin-1").strip(" ")
+    return ValueError(
+        f"fixedlen: {what} {f.name!r} (e.g. {value!r}); "
+        "use mode=permissive to null malformed values"
+    )
+
+
+def _date32(days: np.ndarray, ok: np.ndarray) -> pa.Array:
+    mask = None if ok.all() else ~ok
+    return pa.array(days.astype(np.int32, copy=False), mask=mask).view(pa.date32())
+
+
+def _decode_date(sl: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    """``YYYY-MM-DD`` -> date32.  After trimming spaces a value must be
+    exactly that canonical form and a real day (Gregorian leap years);
+    anything else raises (failfast) or is nulled (permissive)."""
+    cols, ok = _value_columns(sl, 10)
+    year, year_ok = _digits(cols, 0, 4)
+    month, month_ok = _digits(cols, 5, 7)
+    day, day_ok = _digits(cols, 8, 10)
+    # month 00, 13+ and non-digit months index the table's 0-day month
+    month_days = _DAYS_IN_MONTH[np.where(month_ok & (month <= 12), month, 0)] + (
+        (month == 2) & _is_leap(year)
+    )
+    ok &= (
+        year_ok & day_ok
+        & (cols[4] == 0x2D) & (cols[7] == 0x2D)
+        & (day >= 1) & (day <= month_days)
+    )
+    if not permissive and not ok.all():
+        raise _malformed(f, sl, ~ok, "malformed or calendar-invalid date in field")
+    return _date32(_days_from_civil(year, month, day), ok)
+
+
+def _decode_julian(sl: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    """Mainframe Julian date -> date32: YYDDD (windowed century: YY >= 70
+    -> 19YY else 20YY, the classic COBOL Y2K window) or YYYYDDD, decoded
+    as Jan 1 of the year plus DDD - 1 with DDD checked against the
+    year's real length.  The trimmed value must fill the field: an
+    under-width digit run (' 1234' in a 5-byte field) would otherwise
+    mis-slice into year '1', day 234."""
+    w = f.length
+    cols, ok = _value_columns(sl, w)
+    if not permissive and not ok.all():
+        raise _malformed(
+            f, sl, ~ok, f"julian value narrower than field width {w} in field"
+        )
+    year, year_ok = _digits(cols, 0, w - 3)
+    ddd, ddd_ok = _digits(cols, w - 3, w)
+    ok &= year_ok & ddd_ok
+    if not permissive and not ok.all():
+        raise _malformed(f, sl, ~ok, "non-digit julian value in field")
+    if w == 5:
+        year = year + np.where(year >= 70, 1900, 2000)
+    in_year = (ddd >= 1) & (ddd <= 365 + _is_leap(year))
+    if not permissive and not in_year.all():
+        raise _malformed(f, sl, ~in_year, "day-of-year out of range in julian field")
+    ok &= in_year
+    return _date32(_days_from_civil(year, 1, 1) + ddd - 1, ok)
 
 
 def decode_packed_field(
@@ -342,9 +461,15 @@ def decode_field(mat: np.ndarray, f: FieldSpec, permissive: bool = False) -> pa.
     Robustness order matters: non-printable/non-ASCII bytes are blanked
     BEFORE the UTF-8 cast (a raw 0xFF would otherwise fail the whole
     task), then the regex mask nulls non-numeric text, then int32 gets a
-    range check (Arrow's cast raises on overflow).
+    range check (Arrow's cast raises on overflow).  Calendar types skip
+    the text path: they decode by integer arithmetic on the bytes.
     """
     sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
+    base = f.base_type
+    if base == "date":
+        return _decode_date(sl, f, permissive)
+    if base == "julian":
+        return _decode_julian(sl, f, permissive)
     bad_bytes = None
     if permissive:
         ok = ((sl >= 0x20) & (sl <= 0x7E)).all(axis=1)  # printable ASCII only
@@ -354,7 +479,6 @@ def decode_field(mat: np.ndarray, f: FieldSpec, permissive: bool = False) -> pa.
             sl[~ok] = 0x20  # spaces -> rtrim/regex turn them into null below
     raw = pa.array(sl.view(f"S{f.length}").ravel())
     s = pc.cast(raw, pa.string())
-    base = f.base_type
     if base == "string":
         # values are right-padded with spaces (FixedLengthInputFormat.java:42-43)
         out = pc.utf8_rtrim(s, characters=" ")
@@ -389,96 +513,6 @@ def decode_field(mat: np.ndarray, f: FieldSpec, permissive: bool = False) -> pa.
         )
     if base == "double":
         return pc.cast(trimmed, pa.float64())
-    if base == "julian":
-        # mainframe Julian date: YYDDD (windowed century: YY >= 70 ->
-        # 19YY else 20YY, the classic COBOL Y2K window) or YYYYDDD.
-        # Decoded by explicit day-of-year arithmetic (portable across
-        # Arrow strptime %j quirks): epoch_day(Jan 1, year) + DDD - 1,
-        # with DDD validated against the year's real length.
-        w = f.length
-        year_s = pc.utf8_slice_codeunits(trimmed, 0, w - 3)
-        ddd_s = pc.utf8_slice_codeunits(trimmed, w - 3, w)
-        # exact-width check in BOTH modes: an under-width digit run
-        # (e.g. '1234' in a 5-byte field) would otherwise silently
-        # mis-slice into (year='1', ddd='234') instead of honoring
-        # the failfast contract every other numeric branch keeps
-        len_ok = pc.equal(pc.utf8_length(trimmed), w)
-        short = pc.and_kleene(pc.is_valid(trimmed), pc.invert(len_ok))
-        if not permissive and pc.any(pc.fill_null(short, False)).as_py():
-            raise ValueError(
-                f"fixedlen: julian value narrower than field width {w} in "
-                f"field {f.name!r} (e.g. "
-                f"{trimmed.filter(pc.fill_null(short, False))[0].as_py()!r}); "
-                "use mode=permissive to null malformed values"
-            )
-        year_s = pc.if_else(len_ok, year_s, pa.scalar(None, pa.string()))
-        ddd_s = pc.if_else(len_ok, ddd_s, pa.scalar(None, pa.string()))
-        year = pc.cast(year_s, pa.int32())  # failfast: raises on garbage
-        ddd = pc.cast(ddd_s, pa.int32())
-        if w == 5:
-            year = pc.add(
-                year,
-                pc.if_else(
-                    pc.greater_equal(year, 70),
-                    pa.scalar(1900, pa.int32()),
-                    pa.scalar(2000, pa.int32()),
-                ),
-            )
-        leap = pc.or_(
-            pc.and_(
-                pc.equal(pc.bit_wise_and(year, 3), 0),
-                pc.not_equal(
-                    pc.subtract(year, pc.multiply(pc.divide(year, 100), 100)),
-                    0,
-                ),
-            ),
-            pc.equal(
-                pc.subtract(year, pc.multiply(pc.divide(year, 400), 400)), 0
-            ),
-        )
-        max_ddd = pc.add(pa.scalar(365, pa.int32()), pc.cast(leap, pa.int32()))
-        bad = pc.and_kleene(
-            pc.is_valid(ddd),
-            pc.or_kleene(
-                pc.less(ddd, 1), pc.greater(ddd, max_ddd)
-            ),
-        )
-        if pc.any(pc.fill_null(bad, False)).as_py():
-            if not permissive:
-                raise ValueError(
-                    f"fixedlen: day-of-year out of range in julian field "
-                    f"{f.name!r} (e.g. "
-                    f"{trimmed.filter(pc.fill_null(bad, False))[0].as_py()!r}); "
-                    "use mode=permissive to null malformed values"
-                )
-            year = pc.if_else(bad, pa.scalar(None, pa.int32()), year)
-            ddd = pc.if_else(bad, pa.scalar(None, pa.int32()), ddd)
-        year4 = pc.utf8_lpad(pc.cast(year, pa.string()), 4, "0")
-        jan1 = pc.strptime(
-            pc.binary_join_element_wise(year4, "01", "01", "-"),
-            format="%Y-%m-%d",
-            unit="s",
-        )
-        epoch_day = pc.cast(pc.cast(jan1, pa.date32()), pa.int32())
-        days = pc.add(epoch_day, pc.subtract(ddd, 1))
-        return pc.cast(pc.cast(days, pa.int32()), pa.date32())
-    if base == "date":
-        ts = pc.strptime(trimmed, format="%Y-%m-%d", unit="s")
-        # Arrow strptime silently ROLLS OVER calendar-invalid dates
-        # (2021-04-31 -> 2021-05-01); round-trip to catch them
-        back = pc.strftime(ts, format="%Y-%m-%d")
-        bad = pc.and_kleene(
-            pc.invert(pc.equal(back, trimmed)), pc.is_valid(trimmed)
-        )
-        if pc.any(bad).as_py():
-            if not permissive:
-                raise ValueError(
-                    f"fixedlen: calendar-invalid date in field {f.name!r} "
-                    f"(e.g. {trimmed.filter(bad)[0].as_py()!r}); "
-                    "use mode=permissive to null malformed values"
-                )
-            ts = pc.if_else(bad, pa.scalar(None, ts.type), ts)
-        return pc.cast(ts, pa.date32())
     raise AssertionError(f"unreachable type {f.ftype}")
 
 

@@ -15,7 +15,7 @@ SF_SMALL = "/root/testdata/sf0.001"
 def spark():
     from hadoop_fixedlengthinputformat_spark.tables import get_session
 
-    spark = get_session("flif-tests", cpus=8)
+    spark = get_session("flif-tests")
     yield spark
     spark.stop()
 

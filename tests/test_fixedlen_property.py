@@ -136,8 +136,8 @@ def test_partition_plan_min_one_record(tmp_path):
 
 
 def test_short_read_loop_handles_dribble(tmp_path):
-    """P5: _read_aligned must tolerate read(n) returning fewer bytes
-    (object-store streams)."""
+    """P5: _read_aligned must tolerate readinto filling fewer bytes than
+    asked (object-store streams)."""
     from hadoop_fixedlengthinputformat_spark.sources.fixedlen import _read_aligned
 
     class Dribble:
@@ -148,11 +148,11 @@ def test_short_read_loop_handles_dribble(tmp_path):
         def seek(self, pos):
             self.pos = pos
 
-        def read(self, n):
-            take = min(3, n, len(self.data) - self.pos)  # at most 3 bytes
-            out = self.data[self.pos : self.pos + take]
+        def readinto(self, buf):
+            take = min(3, len(buf), len(self.data) - self.pos)  # at most 3 bytes
+            buf[:take] = self.data[self.pos : self.pos + take]
             self.pos += take
-            return out
+            return take
 
     data = bytes(range(100)) * 10  # 1000 bytes
     chunks = list(_read_aligned(Dribble(data), 0, 1000, 7, 10))
