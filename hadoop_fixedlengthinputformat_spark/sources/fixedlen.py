@@ -621,9 +621,16 @@ def _plan_file(
     # TRUE file positions (the first data record sits at header*rl).
     lo = min(opts.skip_header * rl, usable)
     hi = max(usable - opts.skip_trailer * rl, lo)
-    if hi <= lo:
-        return []
-    # (target // rl) * rl, bumped to at least one record (FLIF:283-292)
+    return _record_splits(path, lo, hi, opts)
+
+
+def _record_splits(
+    path: str, lo: int, hi: int, opts: _Options
+) -> list[FixedLenPartition]:
+    """Partitions covering the record-aligned byte range [lo, hi) of one
+    file, each ``maxPartitionBytes`` rounded down to whole strides:
+    (target // rl) * rl, bumped to at least one record (FLIF:283-292)."""
+    rl = opts.stride
     split = max(rl, (opts.max_partition_bytes // rl) * rl)
     return [
         FixedLenPartition(path, s, min(s + split, hi))
@@ -1562,7 +1569,7 @@ class FixedLenPartitionedStreamReader(DataSourceStreamReader):
     An offset is ``{"pos": byte position of the next unread record}``
     over the uncompressed logical stream of ONE growing file; each
     micro-batch covers ``[start.pos, end.pos)`` split into record-aligned
-    ranges by the same ``_plan_file`` arithmetic as the batch reader
+    ranges by ``_record_splits``, as in the batch reader
     (FixedLengthInputFormat.java:276-298).  Only whole records are ever
     exposed — the split-alignment invariant carried into streaming."""
 
@@ -1594,12 +1601,7 @@ class FixedLenPartitionedStreamReader(DataSourceStreamReader):
         lo, hi = start["pos"], end["pos"]
         if hi <= lo:
             return [FixedLenPartition("", 0, 0)]
-        rl = self.opts.stride
-        split = max(rl, (self.opts.max_partition_bytes // rl) * rl)
-        return [
-            FixedLenPartition(self.path, s, min(s + split, hi))
-            for s in range(lo, hi, split)
-        ]
+        return _record_splits(self.path, lo, hi, self.opts)
 
     def read(self, partition: FixedLenPartition):
         # executor-side: identical decode path to the batch reader
@@ -1619,8 +1621,8 @@ class FixedLenDirectoryStreamReader(DataSourceStreamReader):
     record-aligned bytes appended to known files.  An offset is
     ``{"files": {path: usable_byte_position}}``; gzip members are
     immutable whole-file units (position 0 -> 1 sentinel) read in one
-    partition when they appear.  Ranges split with the same
-    ``_plan_file`` arithmetic as the batch reader, read on executors."""
+    partition when they appear.  Ranges split by ``_record_splits``, as
+    in the batch reader, and are read on executors."""
 
     _GZ_DONE = 1  # sentinel offset: the compressed member has been emitted
 
@@ -1657,7 +1659,6 @@ class FixedLenDirectoryStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         rl = self.opts.stride
-        split = max(rl, (self.opts.max_partition_bytes // rl) * rl)
         seen = start.get("files", {})
         parts: list[FixedLenPartition] = []
         for p, hi in end.get("files", {}).items():
@@ -1670,8 +1671,7 @@ class FixedLenDirectoryStreamReader(DataSourceStreamReader):
             # checkpoints a truncated offset, and resuming from it would emit
             # banner records as data once the file grows
             lo = max(seen.get(p, 0), self.opts.skip_header * rl)
-            for s in range(lo, hi, split):
-                parts.append(FixedLenPartition(p, s, min(s + split, hi)))
+            parts.extend(_record_splits(p, lo, hi, self.opts))
         return parts or [FixedLenPartition("", 0, 0)]
 
     def read(self, partition: FixedLenPartition):
